@@ -233,15 +233,15 @@ object GmmGraft {
     }
     val bc = vecs.sparkContext.broadcast((rsStack, wmFlat, cArr))
     // direct netlib calls (Breeze routes through the same BLAS, but the
-    // raw API gives dsyrk — half the moment flops, accumulating IN the
-    // partition accumulator (beta=1) — and buffer reuse across batches
+    // raw API accumulates IN the partition accumulator (beta=1) and
+    // reuses buffers across batches)
     val batchCap = 1024
     val out = vecs.mapPartitions { it =>
       val blas = dev.ludovic.netlib.blas.BLAS.getInstance()
       val (rsf, wmf, cc) = bc.value
       val rs = new Array[Double](k)
       val rx = new Array[Double](k * p)      // p×k col-major
-      // upper triangles only (dsyrk); mirrored once after the reduce
+      // full p×p products (dgemm); mirrored once after the reduce
       val rxx = new Array[Double](k * p * p) // component j at offset j·p²
       var ll = 0.0
       val gBuf = new Array[Double](kp * batchCap) // whitened coords
@@ -298,9 +298,9 @@ object GmmGraft {
           // netlib 3.0.4's VectorBLAS overrides only daxpy/dscal, so
           // dsyrk falls to the scalar Java8BLAS.dsyrkK loop
           // (2.5 GFlop/s) while dgemm runs the blocked dgebp kernels
-          // (13.8 GFlop/s at this shape). The upper triangle is the
-          // same sum as dsyrk's; the post-reduce mirror step overwrites
-          // the lower half from the upper either way.
+          // (13.8 GFlop/s at this shape). rxx holds the full product;
+          // the post-reduce mirror copies the upper triangle over the
+          // lower so each matrix is exactly symmetric.
           blas.dgemm("N", "T", p, p, b, 1.0, xsBuf, 0, p, xsBuf, 0, p,
             1.0, rxx, jj * p * p, p)
           jj += 1
@@ -322,7 +322,9 @@ object GmmGraft {
     val rxxM = Array.tabulate(k) { j2 =>
       val m = BDM.create(p, p,
         java.util.Arrays.copyOfRange(out._3, j2 * p * p, (j2 + 1) * p * p))
-      // mirror the dsyrk upper triangle into the lower half
+      // copy the upper triangle over the lower: dgemm's two halves may
+      // differ in the last bits, and the covariance must be exactly
+      // symmetric
       var c = 1
       while (c < p) {
         var r = 0

@@ -124,25 +124,15 @@ object Components {
     * edge-grain stage could execute twice per round unless ReuseExchange
     * fired — r14 advice), then one node-grain self-join for the jump.
     * The per-round change count rides the same pass (sum of chg flags) —
-    * no extra comparison job. Each round frees the PREVIOUS round's
-    * checkpoint blocks the moment the new table is materialized (the
-    * blocks are tracked via a getPersistentRDDs diff — Dataset.unpersist
-    * cannot reach a localCheckpoint's RDD), so peak residency is ≤3 node
+    * no extra comparison job. Each round's checkpoint is a
+    * [[GraphLoop]] pass, so the PREVIOUS round's table is freed the
+    * moment the new one is materialized: peak residency is ≤3 node
     * tables regardless of round count; rounds are hard-capped at 64
-    * (log₂-bounded convergence makes the cap unreachable). */
+    * (log₂-bounded convergence makes the cap unreachable). The returned
+    * frame is cached (see [[connected]]); the loop frees everything
+    * else. */
   private[graft] def connectedDfJump(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    // eager localCheckpoint + handles to the persisted RDD blocks it
-    // registered, so each round can free its predecessor (calls here are
-    // sequential, so the before/after diff is exact)
-    def ckpt(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(true)
-      val added = sc.getPersistentRDDs
-        .collect { case (id, r) if !before(id) => r }.toSeq
-      (out, added)
-    }
+    val loop = new GraphLoop
     val sym = edges.toDF("src", "dst")
       .union(edges.toDF("dst", "src").select(col("src"), col("dst")))
     // r15 optimization (guide §2.4): dedup INSIDE the src layout — the
@@ -151,15 +141,14 @@ object Components {
     // hash(src) partitioning already co-locates equal (src,dst) pairs
     // (subset-satisfies), so one exchange feeds both the dedup
     // aggregate and the cached per-round join layout.
-    val es = sym
+    val es = loop.cache(sym
       .filter(col("src") =!= col("dst"))
       .repartition(col("src"))
-      .dropDuplicates(Seq("src", "dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .dropDuplicates(Seq("src", "dst")))
     // node universe from the UNfiltered endpoints: a self-loop-only node
     // is still a (singleton) component — the union-find regime labels it
     // with its own id, and the regimes must agree
-    var (p, pBlocks) = ckpt(sym.select(col("src").as("id")).distinct()
+    var p = loop.pass(sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lbl")))
     var rounds = 0
     var changed = 1L
@@ -208,27 +197,23 @@ object Components {
             col("a.lbl") === col("b.jid"))
           .select(col("a.id").as("id"), col("b.jlbl").as("lbl"),
             col("a.plbl").as("plbl"))
-      val (next, nextBlocks) = ckpt(jumped
+      // `next` replaces `p`'s checkpoint: once it is materialized the
+      // previous label table is dead
+      val next = loop.pass(jumped
         .select(col("id"), col("lbl"),
           when(col("lbl") < col("plbl"), 1L).otherwise(0L).as("chg")))
       // coalesce: sum over zero rows is NULL — an empty edge frame must
       // terminate cleanly, not NPE (r14 advice)
       changed = next.agg(coalesce(sum("chg"), lit(0L)).as("c"))
         .head().getLong(0)
-      // `next` is materialized — the previous label table is dead;
-      // free its blocks now
-      pBlocks.foreach(_.unpersist(false))
       delta = next.filter(col("chg") === 1L).select("id", "lbl")
       p = next.select("id", "lbl")
-      pBlocks = nextBlocks
       rounds += 1
     }
     require(changed == 0, s"connectedDfJump did not converge in $rounds rounds")
     val v = p.select(col("id"), col("lbl").as("comp")).cache()
     v.count() // materialize while the label/edge caches are alive
-    pBlocks.foreach(_.unpersist(false))
-    es.unpersist(false)
-    v
+    loop.release(v)
   }
 
   /** GraphX Pregel connected components — the default large-graph

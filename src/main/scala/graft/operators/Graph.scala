@@ -2,16 +2,23 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.TextFns.{hash56, hash56Sql}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Graph analytics over the order graph (suppliers ↔ customers linked
-  * by lineitem⋈orders). Connected components live in Components.scala
-  * (shared with DBSCAN and minhash dedup clustering); this file holds
-  * the iterative-propagation side: PageRank.
+  * by lineitem⋈orders) and the part co-purchase graph (parts sharing
+  * orders): ranking, traversal, peeling and community operators.
+  * Connected components live in Components.scala (shared with DBSCAN
+  * and minhash dedup clustering).
   *
-  * The rank recurrence runs ENTIRELY in scaled integer arithmetic —
+  * Every iterative operator runs its passes through a [[GraphLoop]],
+  * which owns each cache and checkpoint the call creates: edge layouts
+  * live for the loop, a pass's checkpoint is freed once the next pass's
+  * exists, and when the operator returns, the only blocks it leaves
+  * registered are the checkpoints its result reads.
+  *
+  * The rank recurrences run ENTIRELY in scaled integer arithmetic —
   * ranks in units of 10⁻¹² (PrScale), damping as ·85 DIV 100, per-edge
   * contributions floor-divided by out-degree — so every engine replays
   * the exact same longs: no sum-of-doubles partition-order sensitivity,
@@ -28,16 +35,6 @@ object Graph {
     * stay below this through SF ~600. */
   val CustOffset = 10000000L
 
-  /** Integer-scaled PageRank (damping 0.85, [[PrIters]] synchronous
-    * passes) over the undirected supplier–customer graph, expanded to
-    * two directed edges so every node has out-degree ≥ 1 (no dangling
-    * mass to redistribute).
-    *
-    * Scale: the edge table is partitioned ONCE on src and cached — each
-    * pass joins the (nodes-sized) rank table into that fixed layout, so
-    * per-iteration shuffle is ranks-only, never edges (the standard
-    * distributed PageRank posture). Contributions partial-aggregate
-    * map-side; the driver never sees more than the final top-k. */
   /** Distinct supplier–customer pairs linked by an order line. */
   private def scPairs(spark: SparkSession, dir: String): DataFrame =
     Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
@@ -47,54 +44,99 @@ object Graph {
         col("o_custkey").cast("long").as("c"))
       .distinct()
 
+  /** Part pairs a < b bought in one order, one row per shared order. */
+  private def orderPartPairs(spark: SparkSession, dir: String): DataFrame = {
+    val l = Tables.lineitem(spark, dir)
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
+    l.select(col("o"), col("p").as("a"))
+      .join(l.select(col("o"), col("p").as("b")), "o")
+      .filter(col("a") < col("b"))
+  }
+
+  /** The REPEAT-co-purchase graph: distinct part pairs (a, b), a < b,
+    * that shared at least [[KcoreMinW]] orders (the raw co-purchase
+    * graph is near-complete at every SF; the weight threshold is the
+    * standard sparsification that leaves real structure). */
+  private def coPurchasePairs(spark: SparkSession, dir: String): DataFrame =
+    orderPartPairs(spark, dir)
+      .groupBy(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+      .agg(count(lit(1)).as("w"))
+      .filter(col("w") >= KcoreMinW).select("a", "b")
+
+  /** Both directions of every undirected edge (x, y) as (src, dst),
+    * with the `carry` columns riding along. */
+  private def bothWays(e: DataFrame, x: Column, y: Column,
+      carry: String*): DataFrame = {
+    val c = carry.map(col)
+    e.select(x.as("src") +: y.as("dst") +: c: _*)
+      .union(e.select(y.as("src") +: x.as("dst") +: c: _*))
+  }
+
+  /** The symmetric directed edge list of a bipartite (s, c) frame, with
+    * customer ids offset by [[CustOffset]] so both sides share one node
+    * id space. */
+  private def bipartiteEdges(e: DataFrame, carry: String*): DataFrame =
+    bothWays(e, col("s"), col("c") + CustOffset, carry: _*)
+
+  /** (node_type, node_id, `as`) for offset bipartite node ids. */
+  private def typedNodes(df: DataFrame, value: String, as: String): DataFrame =
+    df.select(
+      when(col("node") >= CustOffset, lit("cust")).otherwise(lit("supp"))
+        .as("node_type"),
+      when(col("node") >= CustOffset, col("node") - CustOffset)
+        .otherwise(col("node")).as("node_id"),
+      col(value).as(as))
+
+  /** Integer-scaled PageRank (damping 0.85, [[PrIters]] synchronous
+    * passes) over the undirected supplier–customer graph, expanded to
+    * two directed edges so every node has out-degree ≥ 1 (no dangling
+    * mass to redistribute). */
   def pageRank(spark: SparkSession, dir: String): DataFrame =
     pageRankPairs(scPairs(spark, dir), topK = 20)
 
-  /** Core over any distinct bipartite (s, c) pair frame; see [[pageRank]].
-    * `iters` exists for the per-pass cost probe (tools.GraphProbe) —
-    * gates always run the default [[PrIters]]. */
-  private[graft] def pageRankPairs(e: DataFrame, topK: Int,
-      iters: Int = PrIters): DataFrame = {
-    val edges = e.select(col("s").as("src"), (col("c") + CustOffset).as("dst"))
-      .union(e.select((col("c") + CustOffset).as("src"), col("s").as("dst")))
+  /** Top-k over any distinct bipartite (s, c) pair frame; see [[pageRank]]. */
+  private[graft] def pageRankPairs(e: DataFrame, topK: Int): DataFrame =
+    typedNodes(pageRankCore(bipartiteEdges(e)), "r", "rank_units")
+      .orderBy(col("rank_units").desc, col("node_type"), col("node_id"))
+      .limit(topK)
+
+  /** Generic UNIPARTITE PageRank over a distinct undirected (a, b) edge
+    * frame; returns the full (node, rank_units) table (nodes-sized —
+    * callers bound the node universe, e.g. a df-capped vocabulary). */
+  private[graft] def pageRankNodes(e: DataFrame): DataFrame =
+    pageRankCore(bothWays(e, col("a"), col("b")))
+      .select(col("node"), col("r").as("rank_units"))
+
+  /** The rank recurrence over a symmetric directed (src, dst) edge
+    * list; returns the checkpointed (node, r) table.
+    *
+    * Scale: r16 (guide §2.4/§3.1) picks one of two regimes from the
+    * MEASURED node count. Small-node regime (the shipped gates: nodes =
+    * suppliers+customers, dim-grain): edges cached pre-partitioned on
+    * the AGGREGATION key dst; each pass broadcast-joins the node-sized
+    * rank table (checkpointed so the broadcast builds from a
+    * materialized leaf, not a replay of prior passes) and the
+    * contribution rollup runs inside the existing hash(dst) layout —
+    * zero edge-grain exchanges per pass. Large-node regime: edges
+    * partitioned once on the JOIN key src and cached; ranks +
+    * partial-agg contributions shuffle each pass, never edges. */
+  private def pageRankCore(edges: DataFrame): DataFrame = {
     val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
     val nNodes = deg.count() // one narrow job, and the regime evidence
-    // r16 (guide §2.4/§3.1): two regimes from the MEASURED node count.
-    // Small-node regime (the shipped gates: nodes = suppliers+customers,
-    // dim-grain): edges cached pre-partitioned on the AGGREGATION key
-    // dst; each pass broadcast-joins the node-sized rank table
-    // (checkpointed so the broadcast builds from a materialized leaf,
-    // not a replay of prior passes) and the contribution rollup runs
-    // inside the existing hash(dst) layout — zero edge-grain exchanges
-    // per pass. Large-node regime: the r15 shape verbatim (edges
-    // partitioned on the JOIN key src; ranks + partial-agg contribs
-    // shuffle each pass).
     val small = nNodes <= GraphBroadcastMaxNodes
-    val edgesD = edges.join(deg, "src")
-      .repartition(if (small) col("dst") else col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val loop = new GraphLoop
+    val edgesD = loop.cache(edges.join(deg, "src")
+      .repartition(if (small) col("dst") else col("src")))
     val base = (PrScale * 15L / 100L) / nNodes
     var ranks = deg.select(col("src").as("node"), lit(PrScale / nNodes).as("r"))
-    for (_ <- 1 to iters) {
-      val r = if (small) broadcast(ranks.localCheckpoint(true)) else ranks
+    for (_ <- 1 to PrIters) {
+      val r = if (small) broadcast(loop.pass(ranks)) else ranks
       ranks = edgesD.join(r, col("src") === col("node"))
         .selectExpr("dst", "((r * 85) DIV 100) DIV d AS contrib")
         .groupBy("dst").agg(sum("contrib").as("rc"))
         .select(col("dst").as("node"), (col("rc") + lit(base)).as("r"))
     }
-    // truncate lineage + materialize the (small) final ranks while the
-    // edge cache is alive, then release it — no cross-query cache leak
-    val finalRanks = ranks.localCheckpoint(true)
-    edgesD.unpersist(false)
-    finalRanks
-      .select(
-        when(col("node") >= CustOffset, lit("cust")).otherwise(lit("supp"))
-          .as("node_type"),
-        when(col("node") >= CustOffset, col("node") - CustOffset)
-          .otherwise(col("node")).as("node_id"),
-        col("r").as("rank_units"))
-      .orderBy(col("rank_units").desc, col("node_type"), col("node_id"))
-      .limit(topK)
+    loop.finish(ranks)
   }
 
   val PprSeedMod = 17L
@@ -109,21 +151,19 @@ object Graph {
     * re-adds the restart mass to seeds via a full-outer join so a seed
     * with no in-links still holds its teleport share.
     *
-    * Scale: identical posture to pageRank — edges partitioned once and
-    * cached, per-pass shuffle is (nonzero-)ranks-only. */
+    * Scale: edges partitioned once on src and cached, per-pass shuffle
+    * is (nonzero-)ranks-only. */
   def personalizedPageRank(spark: SparkSession, dir: String): DataFrame =
     pprPairs(scPairs(spark, dir), topK = 20)
 
   /** Core over any distinct bipartite (s, c) pair frame. */
   private[graft] def pprPairs(e: DataFrame, topK: Int): DataFrame = {
-    val edges = e.select(col("s").as("src"), (col("c") + CustOffset).as("dst"))
-      .union(e.select((col("c") + CustOffset).as("src"), col("s").as("dst")))
+    val edges = bipartiteEdges(e)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    val edgesD = edges.join(deg, "src")
-      .repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-    val seeds = e.select(col("s").cast("long").as("node")).distinct()
-      .filter(col("node") % PprSeedMod === 0)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val loop = new GraphLoop
+    val edgesD = loop.cache(edges.join(deg, "src").repartition(col("src")))
+    val seeds = loop.cache(e.select(col("s").cast("long").as("node")).distinct()
+      .filter(col("node") % PprSeedMod === 0))
     val nSeeds = seeds.count() // bounded driver action, materializes cache
     val basePpr = (PrScale * 15L / 100L) / nSeeds
     var ranks = seeds.select(col("node"), lit(PrScale / nSeeds).as("r"))
@@ -137,16 +177,7 @@ object Graph {
         .select(coalesce(col("dst"), col("node")).as("node"),
           (coalesce(col("rc"), lit(0L)) + coalesce(col("b"), lit(0L))).as("r"))
     }
-    val finalRanks = ranks.localCheckpoint(true)
-    edgesD.unpersist(false)
-    seeds.unpersist(false)
-    finalRanks
-      .select(
-        when(col("node") >= CustOffset, lit("cust")).otherwise(lit("supp"))
-          .as("node_type"),
-        when(col("node") >= CustOffset, col("node") - CustOffset)
-          .otherwise(col("node")).as("node_id"),
-        col("r").as("ppr_units"))
+    typedNodes(loop.finish(ranks), "r", "ppr_units")
       .orderBy(col("ppr_units").desc, col("node_type"), col("node_id"))
       .limit(topK)
   }
@@ -182,14 +213,17 @@ object Graph {
     * cache residency for the duration of the fixpoint — freed before
     * return. */
   private[graft] def hitsPairs(e: DataFrame, topK: Int): DataFrame = {
-    val edgesByS = e.repartition(col("s")).persist(StorageLevel.MEMORY_AND_DISK)
-    val edgesByC = e.repartition(col("c")).persist(StorageLevel.MEMORY_AND_DISK)
+    val loop = new GraphLoop
+    val edgesByS = loop.cache(e.repartition(col("s")))
+    val edgesByC = loop.cache(e.repartition(col("c")))
     val nS = edgesByS.select("s").distinct().count()
     def normalize(raw0: DataFrame, key: String, in: String, out: String): DataFrame = {
       // Eager checkpoint: `raw` feeds BOTH the 1-row total and the scores, and
       // each half-pass builds on the previous one — without truncation the
       // plan doubles per half-pass (2^6 recomputes of the base join by iter 3).
-      val raw = raw0.localCheckpoint(true)
+      // One slot per role: a half-pass frees its role's previous scores,
+      // which the other role's half-pass in between has already consumed.
+      val raw = loop.pass(raw0, key)
       val tot = raw.agg(sum(in).as("tot"))
       raw.crossJoin(broadcast(tot))
         .select(col(key),
@@ -211,12 +245,8 @@ object Graph {
     val auths = a.orderBy(col("a").desc, col("c")).limit(topK)
       .select(lit("authority").as("role"), col("c").cast("long").as("node_id"),
         col("a").as("score_units"))
-    val out = hubs.union(auths)
-      .orderBy(col("role"), col("score_units").desc, col("node_id"))
-      .localCheckpoint(true)
-    edgesByS.unpersist(false)
-    edgesByC.unpersist(false)
-    out
+    loop.finish(hubs.union(auths)
+      .orderBy(col("role"), col("score_units").desc, col("node_id")))
   }
 
   /** Triangle census of the part co-purchase graph (parts sharing an
@@ -233,15 +263,9 @@ object Graph {
     * closes each triangle EXACTLY once (a 3-node DAG from a total order
     * has one source; that source is the wedge apex). The oracle counts
     * the same triangles via the a<b<c three-way self-join. */
-  def triangleCensus(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val pairs = l.select(col("o"), col("p").as("a"))
-      .join(l.select(col("o"), col("p").as("b")), "o")
-      .filter(col("a") < col("b"))
-      .select(col("a").cast("long"), col("b").cast("long")).distinct()
-    triangleCensusDf(pairs)
-  }
+  def triangleCensus(spark: SparkSession, dir: String): DataFrame =
+    triangleCensusDf(orderPartPairs(spark, dir)
+      .select(col("a").cast("long"), col("b").cast("long")).distinct())
 
   /** Core over any distinct undirected edge frame with columns (a, b),
     * a < b; see [[triangleCensus]]. */
@@ -326,31 +350,34 @@ object Graph {
   def bfsLayers(spark: SparkSession, dir: String): DataFrame =
     bfsLayersPairs(scPairs(spark, dir))
 
-  private[graft] def bfsLayersPairs(e: DataFrame): DataFrame = {
-    val edges = e.select(col("s").as("src"), (col("c") + CustOffset).as("dst"))
-      .union(e.select((col("c") + CustOffset).as("src"), col("s").as("dst")))
-      .repartition(col("src")) // cached pre-hashed on the per-round join
-      // key — only the frontier side shuffles each hop
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = edges.select(col("src").as("node")).distinct()
+  private[graft] def bfsLayersPairs(e: DataFrame): DataFrame =
+    frontier(e, BfsHops, Nil, _.withColumn("dist", lit(0L)),
+      _.groupBy("dist").agg(count(lit(1)).as("n_nodes")).orderBy("dist"))
+
+  /** The synchronous frontier expansion shared by [[bfsLayers]] and
+    * [[closeness]]: min hop distance per (`label`..., node) after `hops`
+    * rounds from the seed suppliers (suppkey ≡ 1 mod [[BfsSeedMod]]),
+    * which `start` turns into the hop-0 table (label..., node, dist);
+    * `report` folds the final table into the result.
+    *
+    * Scale: the edges are cached pre-hashed on src, the per-round join
+    * key, so only the frontier side shuffles each round. Each round's
+    * table is checkpointed (r15: dist feeds BOTH the frontier filter
+    * and the union, so the un-truncated subtree doubled per hop). */
+  private def frontier(e: DataFrame, hops: Int, label: Seq[String],
+      start: DataFrame => DataFrame, report: DataFrame => DataFrame): DataFrame = {
+    val loop = new GraphLoop
+    val edges = loop.cache(bipartiteEdges(e).repartition(col("src")))
+    val seeds = edges.select(col("src").as("node")).distinct()
       .filter(col("node") < CustOffset && pmod(col("node"), lit(BfsSeedMod)) === 1)
-      .withColumn("dist", lit(0L))
-    for (k <- 1 to BfsHops) {
+    val dist = (1 to hops).foldLeft(start(seeds)) { (dist, k) =>
       val next = edges
-        .join(dist.filter(col("dist") === (k - 1).toLong),
-          col("src") === col("node"))
-        .select(col("dst").as("node"), lit(k.toLong).as("dist"))
-      dist = dist.union(next).groupBy("node").agg(min("dist").as("dist"))
-        // r15 optimization: per-hop trim, the ssspPairs/closenessPairs
-        // posture — dist feeds BOTH the frontier filter and the union,
-        // so the un-truncated subtree doubled per hop (2³ replays of
-        // hop 0 by hop 3; only exchange reuse damped it)
-        .localCheckpoint(true)
+        .join(dist.filter(col("dist") === (k - 1).toLong), col("src") === col("node"))
+        .select(label.map(col) :+ col("dst").as("node") :+ lit(k.toLong).as("dist"): _*)
+      loop.pass(dist.union(next)
+        .groupBy((label :+ "node").map(col): _*).agg(min("dist").as("dist")))
     }
-    val out = dist.groupBy("dist").agg(count(lit(1)).as("n_nodes"))
-      .orderBy("dist").localCheckpoint(true)
-    edges.unpersist(false)
-    out
+    loop.finish(report(dist))
   }
 
   val KcoreK = 3
@@ -358,10 +385,8 @@ object Graph {
   val KcoreMinW = 2
 
   /** Bounded-pass k-core peeling ([[KcoreK]]-core, [[KcorePasses]]
-    * synchronous passes) of the REPEAT-co-purchase graph: parts that
-    * shared at least [[KcoreMinW]] distinct orders (the raw co-purchase
-    * graph is near-complete at every SF; the weight threshold is the
-    * standard sparsification that leaves real structure). Each pass
+    * synchronous passes) of the repeat-co-purchase graph
+    * ([[coPurchasePairs]]). Each pass
     * simultaneously removes every node of current degree < k; the
     * output is the per-pass (surviving nodes, surviving edges) trace —
     * pass 0 is the unpeeled graph, and a converged pass repeats its
@@ -373,17 +398,8 @@ object Graph {
     * peeling round. Pass count is fixed, survivors are checkpointed
     * per pass (iterative-trim posture, same as pageRank), and the
     * driver only ever sees the log-sized census. */
-  def kCore(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val pairs = l.select(col("o"), col("p").as("a"))
-      .join(l.select(col("o"), col("p").as("b")), "o")
-      .filter(col("a") < col("b"))
-      .groupBy(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .agg(count(lit(1)).as("w"))
-      .filter(col("w") >= KcoreMinW).select("a", "b")
-    kCorePairs(pairs)
-  }
+  def kCore(spark: SparkSession, dir: String): DataFrame =
+    kCorePairs(coPurchasePairs(spark, dir))
 
   /** Core over any distinct undirected edge frame (a, b); see [[kCore]].
     *
@@ -397,19 +413,12 @@ object Graph {
     * n_nodes = its row count, n_edges = sum(d) DIV 2 (every edge
     * contributes 2 to the degree sum) — integer-identical, including
     * the empty frame (coalesce pins null→0 exactly like count(1) DIV 2).
-    * Edge-frame checkpoint blocks are freed one pass behind (the
-    * Components ckpt posture): censuses reference only the node-sized
-    * degree checkpoints, so peak edge-block residency is 2 frames
-    * regardless of pass count. */
+    * Edge-frame checkpoints are freed one pass behind: censuses read
+    * only the node-sized degree checkpoints (kept — the returned trace
+    * reads them), so peak edge-block residency is 2 frames regardless
+    * of pass count. */
   private[graft] def kCorePairs(edges0: DataFrame): DataFrame = {
-    val sc = edges0.sparkSession.sparkContext
-    def ckpt(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(true)
-      val added = sc.getPersistentRDDs
-        .collect { case (id, r) if !before(id) => r }.toSeq
-      (out, added)
-    }
+    val loop = new GraphLoop
     def degreesOf(e: DataFrame): DataFrame =
       e.select(explode(array(col("a"), col("b"))).as("v"))
         .groupBy("v").agg(count(lit(1)).as("d"))
@@ -417,8 +426,8 @@ object Graph {
       deg.agg(count(lit(1)).as("n_nodes"),
         expr("coalesce(sum(d), 0) DIV 2").as("n_edges"))
         .select(lit(pass).as("pass"), col("n_nodes"), col("n_edges"))
-    var (cur, curBlocks) = ckpt(edges0)
-    var deg = degreesOf(cur).localCheckpoint(true)
+    var cur = loop.pass(edges0)
+    var deg = loop.keep(degreesOf(cur))
     val traces = Seq.newBuilder[DataFrame]
     traces += censusOf(deg, 0)
     for (p <- 1 to KcorePasses) {
@@ -430,18 +439,14 @@ object Graph {
       // shuffles re-run for the lazy census cost more than the saved
       // edge-frame writes at every scale where the edge set still fits
       // the block manager; keep one checkpoint per peel.
-      val (next, nextBlocks) = ckpt(cur
+      cur = loop.pass(cur
         .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
         .select("a", "b"))
-      // the previous edge frame is referenced by nothing anymore (the
-      // censuses read the degree checkpoints) — free its blocks now
-      curBlocks.foreach(_.unpersist(false))
-      cur = next; curBlocks = nextBlocks
-      deg = degreesOf(cur).localCheckpoint(true)
+      deg = loop.keep(degreesOf(cur))
       traces += censusOf(deg, p)
     }
-    traces.result().reduce(_ unionAll _).orderBy("pass")
+    loop.release(traces.result().reduce(_ unionAll _).orderBy("pass"))
   }
 
   val LpaIters = 3
@@ -454,7 +459,7 @@ object Graph {
     * DuckDB replay matches bit-for-bit (same pinning as PageRank,
     * without even needing a scale factor).
     *
-    * Runs on the weight-≥2 part co-purchase graph (kCore's edge set) —
+    * Runs on the weight-≥2 part co-purchase graph ([[coPurchasePairs]]) —
     * sparse enough to keep real community structure; LPA on the dense
     * bipartite order graph degenerately collapses both sides by
     * oscillation (a known LPA artifact, and a boring gate).
@@ -465,17 +470,8 @@ object Graph {
     * frequency count partial-aggregates map-side, and the per-node
     * argmax is a per-key top-1 (WindowGroupLimit heaps), never a global
     * sort. localCheckpoint truncates the 3-pass lineage. */
-  def labelProp(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val pairs = l.select(col("o"), col("p").as("a"))
-      .join(l.select(col("o"), col("p").as("b")), "o")
-      .filter(col("a") < col("b"))
-      .groupBy(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .agg(count(lit(1)).as("w"))
-      .filter(col("w") >= KcoreMinW).select("a", "b")
-    labelPropPairs(pairs, topK = 20)
-  }
+  def labelProp(spark: SparkSession, dir: String): DataFrame =
+    labelPropPairs(coPurchasePairs(spark, dir), topK = 20)
 
   /** Core over any distinct undirected edge frame (a, b), a < b. */
   private[graft] def labelPropPairs(e: DataFrame, topK: Int): DataFrame =
@@ -502,46 +498,41 @@ object Graph {
     * r16 (guide §2.4/§3.1): two regimes picked from a MEASURED node
     * count, not estimates. Small-label regime (the shipped gates'
     * shape — nodes = parts, dim-sized): edges cached pre-partitioned on
-    * the AGGREGATION key v; each pass broadcast-joins the node-sized
+    * the AGGREGATION key src; each pass broadcast-joins the node-sized
     * label table (checkpointed per pass so the broadcast builds from a
     * materialized leaf, not a replay of prior passes) and BOTH
-    * grouping stages run inside the existing hash(v) layout — zero
-    * edge-grain exchanges per pass (hash(v) subset-satisfies the
-    * (v, lbl) clustering, the dfjump trick). Previously every pass
-    * shuffled the partially-aggregated (v, lbl) frame (near edge-grain
-    * on early passes when neighbor labels haven't converged) plus a
-    * node-grain exchange. Large-label regime: the r15 shape, verbatim
-    * — edges partitioned on the JOIN key u, labels shuffle per pass. */
+    * grouping stages run inside the existing hash(src) layout — zero
+    * edge-grain exchanges per pass (hash(src) subset-satisfies the
+    * (src, lbl) clustering, the dfjump trick). Previously every pass
+    * shuffled the partially-aggregated (src, lbl) frame (near
+    * edge-grain on early passes when neighbor labels haven't converged)
+    * plus a node-grain exchange. Large-label regime: the r15 shape,
+    * verbatim — edges partitioned on the JOIN key dst, labels shuffle
+    * per pass. */
   private[graft] def lpaLabels(e: DataFrame): DataFrame = {
-    val sym = e.select(col("a").as("v"), col("b").as("u"))
-      .union(e.select(col("b").as("v"), col("a").as("u")))
-    // cache in the v-layout FIRST, measure the node universe from the
+    val loop = new GraphLoop
+    // cache in the src-layout FIRST, measure the node universe from the
     // cached frame (an exchange-free distinct — never a replay of the
     // pair-building subtree), and only then pick the regime; the large
     // regime pays one repartition read from this cache, amortized over
     // the per-pass wins it buys
-    val edgesV = sym.repartition(col("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = edgesV.select(col("v").as("node")).distinct()
+    val edgesV = loop.cache(bothWays(e, col("a"), col("b")).repartition(col("src")))
+    var labels = edgesV.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
     val small = labels.count() <= GraphBroadcastMaxNodes
-    val edges = if (small) edgesV
-      else edgesV.repartition(col("u")).persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = if (small) edgesV else loop.cache(edgesV.repartition(col("dst")))
     for (_ <- 1 to LpaIters) {
       // per-node argmax as a struct-max AGGREGATION, not a window: both
       // grouping stages partial-aggregate map-side and neither sorts.
       // max(struct(c, -lbl)) = lexicographic (count desc, label asc) —
       // exactly the pinned tie-break
-      val lbl = if (small) broadcast(labels.localCheckpoint(true)) else labels
-      labels = edges.join(lbl, col("u") === col("node"))
-        .groupBy("v", "lbl").agg(count(lit(1)).as("c"))
-        .groupBy("v").agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
-        .select(col("v").as("node"), (-col("m.nl")).as("lbl"))
+      val lbl = if (small) broadcast(loop.pass(labels)) else labels
+      labels = edges.join(lbl, col("dst") === col("node"))
+        .groupBy("src", "lbl").agg(count(lit(1)).as("c"))
+        .groupBy("src").agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
+        .select(col("src").as("node"), (-col("m.nl")).as("lbl"))
     }
-    val fin = labels.localCheckpoint(true)
-    edgesV.unpersist(false)
-    if (!small) edges.unpersist(false)
-    fin
+    loop.finish(labels)
   }
 
   /** Modularity of the LPA communities — the SCORE the label-prop gate
@@ -557,14 +548,7 @@ object Graph {
     * (intra-edge census + degree census) and a community-grain rollup —
     * nothing beyond the LPA passes themselves. */
   def modularity(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val pairs = l.select(col("o"), col("p").as("a"))
-      .join(l.select(col("o"), col("p").as("b")), "o")
-      .filter(col("a") < col("b"))
-      .groupBy(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .agg(count(lit(1)).as("w"))
-      .filter(col("w") >= KcoreMinW).select("a", "b")
+    val pairs = coPurchasePairs(spark, dir)
       .localCheckpoint() // feeds labels, intra census, and degrees
     val labels = lpaLabels(pairs)
     val m = pairs.count()
@@ -609,15 +593,7 @@ object Graph {
     * the oracle is the same recursive-CTE min-label propagation run to
     * fixpoint, so the component labels (min node id) match exactly. */
   def connectedComponents(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val pairs = l.select(col("o"), col("p").as("a"))
-      .join(l.select(col("o"), col("p").as("b")), "o")
-      .filter(col("a") < col("b"))
-      .groupBy(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .agg(count(lit(1)).as("w"))
-      .filter(col("w") >= KcoreMinW).select("a", "b")
-    val comp = Components.connected(pairs)
+    val comp = Components.connected(coPurchasePairs(spark, dir))
     graft.GateUtil.pinned(
       comp.groupBy("comp").agg(count(lit(1)).as("csize"))
         .groupBy("csize")
@@ -625,37 +601,6 @@ object Graph {
           (col("csize") * count(lit(1))).as("n_nodes"),
           sum("comp").as("sum_labels"))
         .orderBy("csize"))(comp.unpersist(false))
-  }
-
-  /** Generic UNIPARTITE integer PageRank over a distinct undirected
-    * (a, b) edge frame — the same 10⁻¹²-unit recurrence as
-    * [[pageRankPairs]] without the bipartite node offsetting; returns
-    * the full (node, rank_units) table (nodes-sized — callers bound the
-    * node universe, e.g. a df-capped vocabulary). */
-  private[graft] def pageRankNodes(e: DataFrame): DataFrame = {
-    val edges = e.select(col("a").as("src"), col("b").as("dst"))
-      .union(e.select(col("b").as("src"), col("a").as("dst")))
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    val nNodes = deg.count()
-    // same two-regime pick as pageRankPairs (r16, guide §2.4/§3.1):
-    // dst-layout + per-pass broadcast ranks when the node universe is
-    // measured small (callers bound it, e.g. a df-capped vocabulary)
-    val small = nNodes <= GraphBroadcastMaxNodes
-    val edgesD = edges.join(deg, "src")
-      .repartition(if (small) col("dst") else col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = (PrScale * 15L / 100L) / nNodes
-    var ranks = deg.select(col("src").as("node"), lit(PrScale / nNodes).as("r"))
-    for (_ <- 1 to PrIters) {
-      val r = if (small) broadcast(ranks.localCheckpoint(true)) else ranks
-      ranks = edgesD.join(r, col("src") === col("node"))
-        .selectExpr("dst", "((r * 85) DIV 100) DIV d AS contrib")
-        .groupBy("dst").agg(sum("contrib").as("rc"))
-        .select(col("dst").as("node"), (col("rc") + lit(base)).as("r"))
-    }
-    val fin = ranks.localCheckpoint(true)
-    edgesD.unpersist(false)
-    fin.select(col("node"), col("r").as("rank_units"))
   }
 
   val LinkPredMaxDeg = 64L
@@ -736,30 +681,20 @@ object Graph {
 
   /** Core over a weighted bipartite (s, c, w) frame. */
   private[graft] def ssspPairs(wp: DataFrame, topK: Int): DataFrame = {
-    val edges = wp.select(col("s").as("src"), (col("c") + CustOffset).as("dst"), col("w"))
-      .union(wp.select((col("c") + CustOffset).as("src"), col("s").as("dst"), col("w")))
-      .repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+    val loop = new GraphLoop
+    val edges = loop.cache(bipartiteEdges(wp, "w").repartition(col("src")))
     val src0 = wp.agg(min("s")).head().getLong(0)
     var dist = edges.sparkSession.range(1)
       .select(lit(src0).as("node"), lit(0L).as("dist"))
     for (_ <- 1 to SsspPasses) {
       val relaxed = edges.join(dist, col("src") === col("node"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.union(relaxed).groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint(true) // linear-lineage trim, one small table per round
+      // linear-lineage trim, one small table per round
+      dist = loop.pass(dist.union(relaxed).groupBy("node").agg(min("dist").as("dist")))
     }
-    val out = dist
-      .select(
-        when(col("node") >= CustOffset, lit("cust")).otherwise(lit("supp"))
-          .as("node_type"),
-        when(col("node") >= CustOffset, col("node") - CustOffset)
-          .otherwise(col("node")).as("node_id"),
-        col("dist").as("dist_cents"))
+    loop.finish(typedNodes(dist, "dist", "dist_cents")
       .orderBy(asc("dist_cents"), asc("node_type"), asc("node_id"))
-      .limit(topK)
-      .localCheckpoint(true)
-    edges.unpersist(false)
-    out
+      .limit(topK))
   }
 
   val CloseSeeds = 8
@@ -777,41 +712,21 @@ object Graph {
     *
     * Scale: per round one (frontier ⋈ edges) hash join + a min-agg
     * keyed on (seed, node) against the once-partitioned cached edge
-    * set — the pregel posture of [[bfsLayersPairs]] with a seed label
+    * set — the [[frontier]] loop of [[bfsLayersPairs]] with a seed label
     * riding along; the panel bounds every frontier at k·|nodes|. */
   def closeness(spark: SparkSession, dir: String): DataFrame =
     closenessPairs(scPairs(spark, dir))
 
-  private[graft] def closenessPairs(e: DataFrame): DataFrame = {
-    val edges = e.select(col("s").as("src"), (col("c") + CustOffset).as("dst"))
-      .union(e.select((col("c") + CustOffset).as("src"), col("s").as("dst")))
-      .repartition(col("src")) // pre-hash on the per-round join key: the
-      // cached layout satisfies every frontier join's distribution, so
-      // only the (small) frontier side shuffles each round
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val seeds = edges.select(col("src").as("node")).distinct()
-      .filter(col("node") < CustOffset && pmod(col("node"), lit(BfsSeedMod)) === 1)
-      .orderBy("node").limit(CloseSeeds) // TakeOrdered — a k-row panel
-      .select(col("node").as("seed"))
-    var dist = seeds.select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
-    for (k <- 1 to CloseHops) {
-      val next = edges
-        .join(dist.filter(col("dist") === (k - 1).toLong), col("src") === col("node"))
-        .select(col("seed"), col("dst").as("node"), lit(k.toLong).as("dist"))
-      dist = dist.union(next)
-        .groupBy("seed", "node").agg(min("dist").as("dist"))
-        .localCheckpoint(true) // linear-lineage trim per round
-    }
-    val out = dist.groupBy("seed")
-      .agg(count(lit(1)).as("n_reached"),
-        sum(when(col("dist") >= 1L, expr("1000000 DIV dist")).otherwise(0L))
-          .as("harmonic_micro"),
-        sum("dist").as("sum_dist"))
-      .orderBy("seed")
-      .localCheckpoint(true)
-    edges.unpersist(false)
-    out
-  }
+  private[graft] def closenessPairs(e: DataFrame): DataFrame =
+    frontier(e, CloseHops, Seq("seed"),
+      _.orderBy("node").limit(CloseSeeds) // TakeOrdered — a k-row panel
+        .select(col("node").as("seed"), col("node"), lit(0L).as("dist")),
+      _.groupBy("seed")
+        .agg(count(lit(1)).as("n_reached"),
+          sum(when(col("dist") >= 1L, expr("1000000 DIV dist")).otherwise(0L))
+            .as("harmonic_micro"),
+          sum("dist").as("sum_dist"))
+        .orderBy("seed"))
 
   /** Categorical (nation) assortativity of the trade graph — Newman's
     * attribute-mixing coefficient over the distinct supplier→customer
@@ -911,9 +826,7 @@ object Graph {
     // adjacency build each need one pass, and without the cache the
     // probe would re-derive the upstream pair join (measured 4.1/18.2 s
     // vs 3.2/6.3 uncached-probe vs cached below)
-    val edges = e.select(col("s").as("src"), (col("c") + CustOffset).as("dst"))
-      .union(e.select((col("c") + CustOffset).as("src"), col("s").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = bipartiteEdges(e).persist(StorageLevel.MEMORY_AND_DISK)
     // scale-adaptive layout (the Components union-find/GraphX pattern):
     // one cheap max-degree probe (partial-aggregated scalar over the
     // cached edges) decides whether any row would exceed segLen.

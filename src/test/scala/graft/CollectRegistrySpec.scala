@@ -73,8 +73,8 @@ class CollectRegistrySpec extends AnyFunSuite {
     "StreamingGates.scala" -> (1, "limit(1) mode row"),
     "Temporal.scala" -> (1, "day-grain calendar horizon"),
     "Components.scala" -> (1,
-      "union-find regime only: engaged when the edge count is ≤ the " +
-        "CcLocalMaxEdges (5M) threshold; larger graphs take the " +
+      "union-find regime only: engaged when the edge count is ≤ " +
+        "connected()'s maxDriverEdges (5000000L); larger graphs take the " +
         "GraphX/Pregel path with no driver materialization"),
     "Neighbors.scala" -> (1,
       "Daura leader-cluster member ids — one cluster per iteration, " +
@@ -115,5 +115,20 @@ class CollectRegistrySpec extends AnyFunSuite {
     assert(drifted.isEmpty,
       s"collect-site count drift — update the registry entry (and its " +
         s"bound reason) consciously: ${drifted.toSeq.sorted.mkString("; ")}")
+  }
+
+  test("getPersistentRDDs is read only by Bench's between-entry sweep") {
+    // the registry is SparkContext-wide: an operator that diffs or sweeps
+    // it would also free a concurrent job's blocks. Operators own their
+    // blocks through the Datasets that created them (GraphLoop).
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"expected sources at ${root.getAbsolutePath}")
+    val users = scalaFiles(root).filter { f =>
+      scala.io.Source.fromFile(f, "UTF-8").getLines()
+        .exists(_.contains("getPersistentRDDs"))
+    }.map(_.getName).toSet
+    assert(users.contains("Bench.scala"), "Bench's sweep moved — update this spec")
+    assert(users == Set("Bench.scala"),
+      s"getPersistentRDDs outside Bench.scala: ${(users - "Bench.scala").toSeq.sorted.mkString(", ")}")
   }
 }
